@@ -56,6 +56,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ivfadc_spark.session import detect_avail_mb  # noqa: E402
+
 # caps = the round-4 grants; on a >=128 GiB host the derived sizes hit the
 # caps and behave identically to round 4's fixed trio
 _DRIVER_CAP_MB = 48 * 1024
@@ -63,29 +65,6 @@ _EXEC_CAP_MB = 22 * 1024
 # below this much available RAM the two-JVM plan has no headroom for
 # tmpfs shuffle + OS cache and is not worth attempting
 _TWO_JVM_MIN_MB = 40 * 1024
-
-
-def detect_avail_mb() -> int:
-    """Available host RAM in MB (MemAvailable, falling back to 80% of
-    MemTotal). SPARK_GRAFT_MEM_TOTAL_MB overrides for tests."""
-    env = os.environ.get("SPARK_GRAFT_MEM_TOTAL_MB")
-    if env:
-        return int(env)
-    total = avail = None
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    avail = int(line.split()[1]) // 1024
-                elif line.startswith("MemTotal:"):
-                    total = int(line.split()[1]) // 1024
-    except OSError:
-        pass
-    if avail is not None:
-        return avail
-    if total is not None:
-        return int(total * 0.8)
-    return 16 * 1024  # unknowable: assume a small host -> one-JVM plan
 
 
 def plan_masters(cpus: int, avail_mb: int) -> list[tuple[str, dict | None, int]]:
@@ -243,7 +222,7 @@ def main() -> None:
 
     avail_mb = detect_avail_mb()
     attempts = plan_masters(cpus, avail_mb)
-    last_err: BaseException | None = None
+    last_err: Exception | None = None
     for i, (master, conf, width) in enumerate(attempts):
         conf = dict(conf or {})
         driver_mb = conf.pop("__driver_mem_mb", None)
@@ -274,7 +253,7 @@ def main() -> None:
                 )
             )
             return
-        except BaseException as e:  # noqa: BLE001 — anything means "next master"
+        except Exception as e:  # noqa: BLE001 — any failure means "next master"
             last_err = e
             print(
                 f"bench: master {master} failed ({type(e).__name__}: {e}); "

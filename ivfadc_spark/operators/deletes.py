@@ -26,16 +26,20 @@ Semantics (Lucene/ES "deleted docs", kept deliberately):
 
 Scale shape: the mask is one broadcast boolean array (1 byte per doc_id of
 doc_space — 1 GB per billion docs per executor; beyond that ship it
-shard-aligned like the sentinel dl sidecar). Compaction is one mapInPandas
-pass over the blocks dataset (decode -> filter -> re-encode; the layout is
-preserved so the rewrite needs NO shuffle to keep the term_bucket
-partitioning) plus one survivors aggregation for the dictionary.
+shard-aligned like the sentinel dl sidecar). The segment handle holds the
+mask and its broadcast, keyed on the ``tombstones/`` file listing: queries
+reuse them until a delete through ANY handle changes the listing.
+Compaction is one mapInPandas pass over the blocks dataset (decode ->
+filter -> re-encode; the layout is preserved so the rewrite needs NO
+shuffle to keep the term_bucket partitioning) plus one survivors
+aggregation for the dictionary.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 from typing import Iterable
 
 import numpy as np
@@ -47,6 +51,10 @@ from ivfadc_spark.functions.codecs import varint_decode, varint_encode
 from ivfadc_spark.operators.segments import Segment, SegmentSet, _idf_col
 
 TOMBSTONES = "tombstones"
+
+# guards every handle's ``_live`` entry (check listing, rebuild, swap the
+# broadcast); re-entrant because a SegmentSet's rebuild reads its members'
+_LIVE_LOCK = threading.RLock()
 
 
 def delete_docs(segment: Segment, doc_ids: "Iterable[int] | DataFrame") -> int:
@@ -62,8 +70,7 @@ def delete_docs(segment: Segment, doc_ids: "Iterable[int] | DataFrame") -> int:
     path = os.path.join(segment.path, TOMBSTONES)
     n = df.count()
     df.write.mode("append").parquet(path)
-    if hasattr(segment, "_live_bc"):  # invalidate the cached broadcast mask
-        del segment._live_bc
+    _drop_live(segment)  # other handles see the new listing on their next query
     return int(n)
 
 
@@ -77,30 +84,88 @@ def tombstone_ids(segment: Segment) -> np.ndarray:
     return np.unique(ids)
 
 
-def live_mask(segment: "Segment | SegmentSet") -> "np.ndarray | None":
-    """doc_space-sized boolean keep-mask (True = live), or None when the
-    segment has no tombstones at all (the fast common case — scans then
-    skip the mask gather entirely).
+def _listing(segment: Segment) -> tuple:
+    """(name, size, mtime) of every file in the segment's tombstones
+    sidecar, () if it has none. An append adds part files and rewrites
+    ``_SUCCESS``, so any delete changes it, whichever handle made it."""
+    try:
+        with os.scandir(os.path.join(segment.path, TOMBSTONES)) as it:
+            stats = [(e.name, e.stat()) for e in it]
+    except FileNotFoundError:
+        return ()
+    return tuple(sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats))
 
-    For a :class:`SegmentSet`, member masks concatenate in member order:
-    federation offsets doc ids by cumulative ``doc_space``, so member i's
-    local id d maps to global ``offsets[i] + d`` — exactly its slice here."""
+
+def _build_mask(segment: "Segment | SegmentSet") -> "np.ndarray | None":
     if isinstance(segment, SegmentSet):
-        parts, any_dead = [], False
-        for s in segment.segments:
-            dead = tombstone_ids(s)
-            m = np.ones(int(s.doc_space), dtype=bool)
-            if dead.size:
-                any_dead = True
-                m[dead] = False
-            parts.append(m)
-        return np.concatenate(parts) if any_dead else None
+        masks = [live_mask(s) for s in segment.segments]
+        if all(m is None for m in masks):
+            return None
+        return np.concatenate([
+            np.ones(int(s.doc_space), dtype=bool) if m is None else m
+            for s, m in zip(segment.segments, masks)
+        ])
     dead = tombstone_ids(segment)
     if not dead.size:
         return None
     m = np.ones(int(segment.doc_space), dtype=bool)
     m[dead] = False
     return m
+
+
+def _live_entry(segment: "Segment | SegmentSet") -> list:
+    """The handle's [listing, mask, broadcast-or-None], rebuilt when the
+    tombstone listing changed since it was built."""
+    if isinstance(segment, SegmentSet):
+        key = tuple(_listing(s) for s in segment.segments)
+    else:
+        key = _listing(segment)
+    with _LIVE_LOCK:
+        if segment._live is None or segment._live[0] != key:
+            _drop_live(segment)
+            mask = _build_mask(segment)
+            if mask is not None:
+                mask.flags.writeable = False  # shared by every later query
+            segment._live = [key, mask, None]
+        return segment._live
+
+
+def _drop_live(segment: "Segment | SegmentSet") -> None:
+    with _LIVE_LOCK:
+        if segment._live is not None and segment._live[2] is not None:
+            # unpersist, not destroy: a plan built before the delete may
+            # still run and re-fetch it
+            segment._live[2].unpersist()
+        segment._live = None
+
+
+def live_mask(segment: "Segment | SegmentSet") -> "np.ndarray | None":
+    """doc_space-sized boolean keep-mask (True = live), or None when the
+    segment has no tombstones at all (the fast common case — scans then
+    skip the mask gather entirely). Read-only: the handle keeps it for
+    later queries until the tombstone listing changes.
+
+    For a :class:`SegmentSet`, member masks concatenate in member order:
+    federation offsets doc ids by cumulative ``doc_space``, so member i's
+    local id d maps to global ``offsets[i] + d`` — exactly its slice here."""
+    return _live_entry(segment)[1]
+
+
+def live_broadcast(segment: "Segment | SegmentSet", doc_mask: "np.ndarray | None" = None):
+    """Broadcast keep-mask for a scan, or None when no doc is masked out.
+
+    Without ``doc_mask`` this is the handle's one broadcast of its
+    tombstone mask, reused by every query until a delete changes the
+    listing (then unpersisted). A ``doc_mask`` is per call, so the mask
+    combined with it is broadcast per call."""
+    if doc_mask is not None:
+        m = combine_masks(live_mask(segment), doc_mask)
+        return segment.spark.sparkContext.broadcast(m)
+    with _LIVE_LOCK:
+        entry = _live_entry(segment)
+        if entry[1] is not None and entry[2] is None:
+            entry[2] = segment.spark.sparkContext.broadcast(entry[1])
+        return entry[2]
 
 
 def attribute_mask(segment: "Segment | SegmentSet", predicate) -> np.ndarray:

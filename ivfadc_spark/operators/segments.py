@@ -39,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,11 +55,27 @@ def _idf_col(n_docs: int):
 
 
 class Segment:
+    """Handle on one written segment directory.
+
+    A segment is immutable once written (deletes append to a separate
+    ``tombstones/`` sidecar), so the handle opens each dataset's reader
+    once and every later query reuses it: ``spark.read.parquet`` costs a
+    footer-schema job, and ``blocks/`` (one directory per term bucket,
+    more than Spark's parallel-listing threshold) a partition-listing job
+    as well. Keep one handle open per segment, as a server holds its
+    index open."""
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
+        # (tombstone listing, keep-mask, mask broadcast) — owned by
+        # operators.deletes (live_mask / live_broadcast / delete_docs)
+        self._live = None
+
+    def _read(self, name: str) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.path, name))
 
     @property
     def blocks(self) -> DataFrame:
@@ -68,13 +85,13 @@ class Segment:
             F.col("term").isNotNull() & (F.col("block_id") >= 0)
         )
 
-    @property
+    @cached_property
     def raw_blocks(self) -> DataFrame:
         """Blocks INCLUDING the sentinel doc-stats rows (term IS NULL,
         partition term_bucket=-1) — what merge/federation must carry."""
-        return self.spark.read.parquet(os.path.join(self.path, "blocks"))
+        return self._read("blocks")
 
-    @property
+    @cached_property
     def doc_lengths(self) -> DataFrame:
         """(doc_id, dl) sidecar: the materialized dataset if stage 02 wrote
         one, else decoded from the sentinel rows. A segment with NEITHER
@@ -82,9 +99,8 @@ class Segment:
         posting decode — zero-token docs are absent there (they carry no
         postings), which matches BM25 semantics (dl only ever multiplies a
         nonzero tf)."""
-        p = os.path.join(self.path, "doc_lens")
-        if os.path.exists(p):
-            return self.spark.read.parquet(p)
+        if os.path.exists(os.path.join(self.path, "doc_lens")):
+            return self._read("doc_lens")
         from ivfadc_spark.operators.postings import decode_blocks, decode_doc_stats
 
         if int(self.meta.get("n_shards", 0) or 0) > 0:
@@ -94,17 +110,17 @@ class Segment:
         # doc's dl; distinct collapses the per-term duplication)
         return decode_blocks(self.raw_blocks).select("doc_id", "dl").distinct()
 
-    @property
+    @cached_property
     def doc_map(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_map"))
+        return self._read("doc_map")
 
-    @property
+    @cached_property
     def dictionary(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "dict"))
+        return self._read("dict")
 
-    @property
+    @cached_property
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "metrics"))
+        return self._read("metrics")
 
     @property
     def doc_space(self) -> int:
@@ -122,9 +138,11 @@ class Segment:
         coarse-codebook analog (/root/reference/Vocab.cpp:152-166: codebooks
         are always fully loaded). VOCABULARY-SIZED: an explicit OPT-IN cache
         for small segments (``bm25_topk_batch(use_dict_cache=True)``) where
-        the resident frame amortizes across many batches; the default query
-        path resolves idf via a term-pruned dictionary scan instead, so the
-        driver never materializes a 100x-scale vocabulary."""
+        the resident frame amortizes across many batches. The default paths
+        of ``bm25_topk_batch`` and ``bm25_topk_indexed`` resolve idf with one
+        term-pruned ``term IN (...)`` read through the handle's open
+        ``dictionary`` reader instead, so the driver never materializes, and
+        no query broadcasts, a 100x-scale vocabulary."""
         if not hasattr(self, "_dict_pdf"):
             self._dict_pdf = self.dictionary.toPandas()
         return self._dict_pdf
@@ -176,6 +194,7 @@ class SegmentSet:
 
     def __init__(self, spark: SparkSession, paths: list[str]):
         self.spark = spark
+        self._live = None  # see Segment._live
         self.segments = [p if isinstance(p, Segment) else Segment(spark, p) for p in paths]
         if not self.segments:
             raise ValueError("SegmentSet needs at least one segment")

@@ -206,10 +206,9 @@ def bm25_topk_batch(
     avgdl = float(segment.meta["avgdl"])
     spark = segment.spark
 
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
+    from ivfadc_spark.operators.deletes import live_broadcast
 
-    _lm = combine_masks(live_mask(segment), doc_mask)
-    bmask = spark.sparkContext.broadcast(_lm) if _lm is not None else None
+    bmask = live_broadcast(segment, doc_mask)
 
     # query prep: tokenize distributed (JVM explode) and collect the
     # QUERY-sized term frame (the broker role: n_queries x terms rows,
@@ -662,40 +661,56 @@ def bm25_topk_batch(
     return local.repartition(par, "query_id").mapInPandas(merge_topk, RESULT_SCHEMA)
 
 
+def _bucket_col(n_buckets: int):
+    """The blocks' ``term_bucket`` partition of each term."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+
+
 def bm25_topk_indexed(
     queries: DataFrame,
     segment: Segment,
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
-    collect_prune: bool | None = None,
     doc_mask: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Top-k BM25 from a compressed segment, rank-identical to the
     DataFrame path. queries: (query_id, text).
 
-    ``collect_prune=None`` (default) auto-switches on the query-terms batch
-    size: small batches take the driver-side static-prune path, large ones
-    the no-collect broadcast semi-join path — the caller no longer has to
-    know which regime they are in.
+    The path follows the query-terms batch size. A batch of at most
+    ``_COLLECT_PRUNE_MAX_ROWS`` (query, term) rows is collected; one
+    term-pruned ``term IN (...)`` dictionary read resolves its idf and
+    term buckets, and the blocks scan is pruned statically. A larger batch
+    never reaches the driver: it joins the broadcast dictionary and prunes
+    the scan with a broadcast semi-join.
 
     ``doc_mask``: optional doc_space-sized boolean keep-mask (attribute
     scoping, boolean NOT, ...). Tombstones recorded by ``delete_docs`` are
     ALWAYS applied on top (Lucene semantics: deleted docs never surface;
     corpus stats stay the segment's until compaction)."""
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
+    from ivfadc_spark.operators.deletes import live_broadcast
 
     k = k or cfg.top_k
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
-
+    bmask = live_broadcast(segment, doc_mask)
     n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
-    qt = (
-        query_terms(queries)
-        .join(F.broadcast(segment.dictionary.select("term", "idf")), "term")  # drops OOV
-        .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, collect_prune)
+
+    qterms = query_terms(queries)
+    probe = qterms.limit(_COLLECT_PRUNE_MAX_ROWS + 1).collect()
+    if len(probe) > _COLLECT_PRUNE_MAX_ROWS:
+        qt = qterms.join(
+            F.broadcast(segment.dictionary.select("term", "idf")), "term"  # drops OOV
+        ).withColumn("term_bucket", _bucket_col(n_buckets))
+        return _scan_broadcast(segment, qt, k, k1, b, avgdl, bmask)
+    qt_pdf = pd.DataFrame(probe, columns=qterms.columns)
+    if not qt_pdf.empty:
+        idf_pdf = (
+            segment.dictionary.filter(F.col("term").isin(sorted(set(qt_pdf["term"]))))
+            .select("term", "idf", _bucket_col(n_buckets).alias("term_bucket"))
+            .toPandas()
+        )
+        qt_pdf = qt_pdf.merge(idf_pdf, on="term")  # drops OOV
+    return _scan_collected(segment, qt_pdf, k, k1, b, avgdl, bmask)
 
 
 def _topk_scan_from_qt(
@@ -705,59 +720,91 @@ def _topk_scan_from_qt(
     k1: float,
     b: float,
     avgdl: float,
-    _lm: "np.ndarray | None",
-    collect_prune: bool | None,
+    bmask,
 ) -> DataFrame:
-    """Shared pruned-scan core of the indexed top-k paths: takes a resolved
-    (query_id, term, idf, term_bucket) frame (however the caller produced
-    it — exact dictionary join, prefix expansion, ...) and runs the
-    block-pruned MaxScore scan."""
-    spark = segment.spark
-    qt_rows = None
-    if collect_prune is None:
-        probe = qt.limit(_COLLECT_PRUNE_MAX_ROWS + 1).collect()
-        if len(probe) <= _COLLECT_PRUNE_MAX_ROWS:
-            collect_prune, qt_rows = True, probe  # limit() returned everything
-        else:
-            collect_prune = False
-    if collect_prune:
-        # small-batch / low-latency path: collect the (tiny) query-terms set
-        # and prune the blocks scan STATICALLY — term_bucket partition prune
-        # + term row-group min/max prune (O1 inverted-file pruning).
-        if qt_rows is None:
-            qt_rows = qt.collect()
-        if not qt_rows:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        terms = sorted({r["term"] for r in qt_rows})
-        buckets = sorted({r["term_bucket"] for r in qt_rows})
-        qt_df = F.broadcast(
-            spark.createDataFrame(qt_rows).select("term", "query_id", "idf")
-        )
-        blocks = segment.blocks.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-    else:
-        # large-batch / throughput path: no driver round-trip — the query
-        # term set is broadcast JVM-side and prunes the scan via a broadcast
-        # semi-join (partition pruning via DPP on term_bucket where
-        # applicable). Use for batches where a Python collect of
-        # queries x terms would serialize the pipeline.
-        qt_df = F.broadcast(qt.select("term", "query_id", "idf"))
-        blocks = segment.blocks.join(
-            F.broadcast(qt.select("term").distinct()), "term", "leftsemi"
-        )
-    cand = blocks.join(qt_df, "term")
+    """Shared pruned-scan core of the expansion top-k paths: takes a
+    resolved (query_id, term, idf, term_bucket) frame (however the caller
+    produced it — prefix expansion, fuzzy, ...) and runs the block-pruned
+    MaxScore scan, collecting the frame first when it is small."""
+    probe = qt.limit(_COLLECT_PRUNE_MAX_ROWS + 1).collect()
+    if len(probe) > _COLLECT_PRUNE_MAX_ROWS:
+        return _scan_broadcast(segment, qt, k, k1, b, avgdl, bmask)
+    qt_pdf = pd.DataFrame(probe, columns=qt.columns)
+    return _scan_collected(segment, qt_pdf, k, k1, b, avgdl, bmask)
 
+
+def _scan_collected(
+    segment: Segment,
+    qt_pdf: pd.DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    bmask,
+) -> DataFrame:
+    """Small-batch / low-latency path: the collected (query_id, term, idf,
+    term_bucket) rows prune the blocks scan STATICALLY — term_bucket
+    partition prune + term row-group min/max prune (O1 inverted-file
+    pruning)."""
+    spark = segment.spark
+    if qt_pdf.empty:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    terms = sorted(set(qt_pdf["term"]))
+    buckets = sorted({int(x) for x in qt_pdf["term_bucket"]})
+    # from pandas through Arrow, a frame under
+    # spark.sql.execution.arrow.localRelationThreshold is a local relation:
+    # its broadcast is one JVM-only job, where a list of Rows would first be
+    # parallelized and unpickled by Python workers
+    qt_df = F.broadcast(
+        spark.createDataFrame(
+            qt_pdf[["term", "query_id", "idf"]], "term string, query_id long, idf double"
+        )
+    )
+    blocks = segment.blocks.filter(
+        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+    )
+    return _scan(segment, blocks.join(qt_df, "term"), k, k1, b, avgdl, bmask)
+
+
+def _scan_broadcast(
+    segment: Segment,
+    qt: DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    bmask,
+) -> DataFrame:
+    """Large-batch / throughput path: no driver round-trip — the query term
+    set is broadcast JVM-side and prunes the scan via a broadcast semi-join
+    (partition pruning via DPP on term_bucket where applicable), so a
+    Python collect of queries x terms never serializes the pipeline."""
+    qt_df = F.broadcast(qt.select("term", "query_id", "idf"))
+    blocks = segment.blocks.join(
+        F.broadcast(qt.select("term").distinct()), "term", "leftsemi"
+    )
+    return _scan(segment, blocks.join(qt_df, "term"), k, k1, b, avgdl, bmask)
+
+
+def _scan(
+    segment: Segment,
+    cand: DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    bmask,
+) -> DataFrame:
+    """Per-query MaxScore over the candidate (block x query) rows."""
     # hash-partition by query, then scan MANY queries per task inside one
     # mapInPandas pass. groupBy().applyInPandas here pays per-GROUP Arrow +
     # invocation overhead (~10ms x n_queries — it dominates the batch);
     # mapInPandas pays it per PARTITION. A query's rows may span Arrow
     # batches, so each task concatenates its partition (bounded: one
     # partition holds ~n_queries/par query working sets) before grouping.
-    par = spark.sparkContext.defaultParallelism
+    par = segment.spark.sparkContext.defaultParallelism
     cand = cand.repartition(par, "query_id")
     bdl = segment.dl_broadcast  # resident per-doc dl (v3: blocks carry no dl)
-    bmask = spark.sparkContext.broadcast(_lm) if _lm is not None else None
 
     def scan(batches):
         pdfs = [pdf for pdf in batches if len(pdf)]
@@ -795,12 +842,12 @@ def prefix_topk(
     row-group range pruning for free. The expanded (query_id, term) set
     then drives the same block-pruned MaxScore scan as exact search.
     """
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
+    from ivfadc_spark.operators.deletes import live_broadcast
 
     k = k or cfg.top_k
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
+    bmask = live_broadcast(segment, doc_mask)
     n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
     spark = segment.spark
 
@@ -845,10 +892,8 @@ def prefix_topk(
         qt = exact.unionByName(expanded).distinct()
     else:
         qt = exact.distinct()
-    qt = qt.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, None)
+    qt = qt.withColumn("term_bucket", _bucket_col(n_buckets))
+    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, bmask)
 
 
 def fuzzy_topk(
@@ -876,12 +921,12 @@ def fuzzy_topk(
     corpus-bounded, not corpus-sized. The expanded (query_id, term) set
     then drives the shared block-pruned MaxScore scan.
     """
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
+    from ivfadc_spark.operators.deletes import live_broadcast
 
     k = k or cfg.top_k
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
+    bmask = live_broadcast(segment, doc_mask)
     n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     toks = (
@@ -928,10 +973,8 @@ def fuzzy_topk(
         (F.abs(F.length("term") - F.length("s")) <= F.col("dist"))
         & (F.levenshtein(F.col("term"), F.col("s")) <= F.col("dist")),
     ).select("query_id", "term", "idf")
-    qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, None)
+    qt = exact.unionByName(expanded).distinct().withColumn("term_bucket", _bucket_col(n_buckets))
+    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, bmask)
 
 
 def mlt_topk(
@@ -960,12 +1003,12 @@ def mlt_topk(
     from pyspark.sql.window import Window
 
     from ivfadc_spark.functions.tokenize import tokens_col
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
+    from ivfadc_spark.operators.deletes import live_broadcast
 
     k = k or cfg.top_k
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
+    bmask = live_broadcast(segment, doc_mask)
     n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     seeds = docs.filter(
@@ -984,11 +1027,9 @@ def mlt_topk(
         w.withColumn("rn", F.row_number().over(sel))
         .filter(F.col("rn") <= int(max_terms))
         .select("query_id", "term", "idf")
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
+        .withColumn("term_bucket", _bucket_col(n_buckets))
     )
-    res = _topk_scan_from_qt(segment, qt, k + 1, k1, b, avgdl, _lm, None)
+    res = _topk_scan_from_qt(segment, qt, k + 1, k1, b, avgdl, bmask)
     rerank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         res.filter(F.col("doc_id") != F.col("query_id"))  # k+1 absorbs the self-hit
@@ -1117,12 +1158,12 @@ def regex_topk(
     intersects it with the term FST — the O(vocabulary) columnar scan is
     the Spark-native equivalent over a corpus-bounded vocabulary.
     """
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
+    from ivfadc_spark.operators.deletes import live_broadcast
 
     k = k or cfg.top_k
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
+    bmask = live_broadcast(segment, doc_mask)
     n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     toks = (
@@ -1156,7 +1197,5 @@ def regex_topk(
     expanded = d.join(
         F.broadcast(pats), F.regexp_like(F.col("term"), F.col("pat"))
     ).select("query_id", "term", "idf")
-    qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, None)
+    qt = exact.unionByName(expanded).distinct().withColumn("term_bucket", _bucket_col(n_buckets))
+    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, bmask)

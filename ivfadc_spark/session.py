@@ -13,6 +13,48 @@ from pyspark.sql import SparkSession
 
 # minimum free tmpfs bytes before /dev/shm is used for shuffle/spill by default
 _SHM_MIN_FREE = 16 << 30
+# default driver heap: this share of available RAM (local mode runs every
+# task in the driver JVM; the rest stays for Python workers, shuffle files
+# and the page cache), capped at the grant of the old 128 GB hosts
+_DRIVER_MEM_SHARE = 0.45
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def host_cpus() -> int:
+    """CPUs this process may run on (what ``nproc`` counts)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def detect_avail_mb() -> int:
+    """Available host RAM in MB (MemAvailable, falling back to 80% of
+    MemTotal). SPARK_GRAFT_MEM_TOTAL_MB overrides for tests."""
+    env = os.environ.get("SPARK_GRAFT_MEM_TOTAL_MB")
+    if env:
+        return int(env)
+    total = avail = None
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail = int(line.split()[1]) // 1024
+                elif line.startswith("MemTotal:"):
+                    total = int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    if avail is not None:
+        return avail
+    if total is not None:
+        return int(total * 0.8)
+    return 16 * 1024  # unknowable: assume a small host
+
+
+def default_driver_mem() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset, from available RAM."""
+    mb = int(detect_avail_mb() * _DRIVER_MEM_SHARE)
+    return f"{max(1024, min(_DRIVER_MEM_CAP_MB, mb))}m"
 
 
 def _default_local_dir() -> str:
@@ -87,12 +129,12 @@ def get_spark(
         master = os.environ.get("SPARK_GRAFT_MASTER")
     if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         # not under spark-submit (whose gateway already carries --master):
-        # fall back to the local default
-        master = "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32")
+        # fall back to the local default: every CPU of this host
+        master = "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", host_cpus())
     if shuffle_partitions is None and master is not None:
         # match local cores, not the 200 default
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n.split(",")[0]))
+        shuffle_partitions = max(8, host_cpus() if n == "*" else int(n.split(",")[0]))
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
@@ -124,7 +166,10 @@ def get_spark(
         # v2 committer: task outputs move to the final dir at task commit
         # (one rename per file) instead of a serial job-commit merge pass
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         # shuffle/spill on tmpfs: local-mode shuffle through ext4 caps the
         # scaling of shuffle-heavy stages at ~disk bandwidth regardless of
         # cores (cluster analog: fast local SSDs / remote shuffle service).

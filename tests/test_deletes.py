@@ -15,6 +15,7 @@ from ivfadc_spark.operators.deletes import (
     attribute_mask,
     compact_segment,
     delete_docs,
+    live_broadcast,
     live_mask,
     tombstone_ids,
 )
@@ -195,3 +196,70 @@ def test_facet_counts_matches_brute(spark, seg):
         (int(r.query_id), r.role): int(r.n_docs) for r in got.itertuples()
     }
     assert got_map == expect
+
+
+# Spark jobs of one warm single-query bm25_topk_indexed request: the
+# (query, term) probe (two when the limit's first partition is empty), the
+# term-pruned idf read, and the scan (query-term broadcast, shuffle map,
+# result). The segment handle holds its readers and tombstone mask, so
+# nothing else may run per request.
+_REQUEST_JOBS_MAX = 6
+
+
+def _traced(spark, fn):
+    """Run ``fn`` under its own job group; return its result, its job
+    count and the physical plans of the SQL queries it ran."""
+    group = "request-shape"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(max(0, execs.size() - 50), execs.size())
+        if execs.apply(i).description() == group
+    ]
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def test_indexed_request_shape(spark, seg):
+    """A warm request stays within the job bound, and no query of it
+    broadcasts the dictionary: idf comes from a term-pruned read."""
+    handle = Segment(spark, seg.path)
+    assert live_mask(handle) is not None  # the tombstoned path is measured
+
+    def request():
+        q = spark.createDataFrame([(0, "headterm term000")], "query_id long, text string")
+        return bm25_topk_indexed(q, handle, k=10).collect()
+
+    want = request()  # opens the readers, builds the mask and dl broadcasts
+    got, n_jobs, plans = _traced(spark, request)
+    assert sorted(got) == sorted(want) and got
+    assert n_jobs <= _REQUEST_JOBS_MAX
+    dict_scans = [p for p in plans if handle.path.rstrip("/") + "/dict]" in p]
+    assert len(dict_scans) == 1, plans  # the one term-pruned idf read
+    assert "BroadcastExchange" not in dict_scans[0]
+    assert "In(term, [" in dict_scans[0]  # pushed down to the parquet scan
+
+
+def test_delete_through_other_handle_reaches_open_handle(spark, seg):
+    """Handle A keeps its tombstone mask and broadcast across queries; a
+    delete through handle B changes the tombstone listing, so A's next
+    query drops the newly deleted doc."""
+    a, b = Segment(spark, seg.path), Segment(spark, seg.path)
+    before = _run(bm25_topk_indexed(_queries_df(spark), a, k=10))
+    held = live_broadcast(a)
+    assert held is not None and live_broadcast(a) is held
+    victim = int(before["doc_id"].iloc[0])
+    assert live_mask(a)[victim]
+
+    delete_docs(b, [victim])
+    after = _run(bm25_topk_indexed(_queries_df(spark), a, k=10))
+    assert victim not in set(after["doc_id"])
+    assert not live_mask(a)[victim]
+    assert live_broadcast(a) is not held
