@@ -3,19 +3,21 @@
 Reference query path (/root/reference/SearchEngine.cpp:112-212): probe the
 ``ma`` assigned cells' posting lists, reconstruct each posting's residual
 from its PQ codes, score, full-sort, truncate. Ours replaces the full scan +
-full sort with an **exact MaxScore/block-max scan + bounded candidate set**:
+full sort with an **exact MaxScore/block-max scan + bounded candidate set**,
+one multi-query kernel (:func:`_maxscore`) behind both query paths:
 
-1. Query terms are processed in descending upper-bound order
+1. Each query's terms are processed in rounds of descending upper bound
    (ub_t = idf_t * max block impact — the block-max metadata, O3 analog of
    the coarse-cell residual bound).
-2. While unrestricted, whole posting sub-lists are decoded and merged into a
-   numpy accumulator (vectorized TAAT; the reference's ``entrymap`` hash-agg,
-   /root/reference/SearchEngine.cpp:404-407, done with np.unique/np.add.at).
-3. Once the remaining terms' summed upper bound R falls below the current
-   k-th accumulated score θ, no unseen doc can reach the top-k: the scan
-   *restricts* to the candidate set (docs with acc + R >= θ), and remaining
-   terms only intersect candidates — skipping every block whose
-   [first_doc, last_doc] range misses them (block-max skipping).
+2. While a query is unrestricted, its terms' whole posting slices are merged
+   into one sorted accumulator that every query of the scan task shares
+   (vectorized TAAT over (query, doc) keys; the reference's ``entrymap``
+   hash-agg, SearchEngine.cpp:404-407, done with np.unique/np.bincount).
+3. Once a query's remaining terms' summed upper bound R falls below its
+   k-th accumulated score θ, no unseen doc can reach its top-k: the query
+   *restricts* to its candidate set (docs with acc + R >= θ), and its
+   remaining terms only binary-search those candidates in the doc-sorted
+   term slices.
 4. Bounded heap equivalent: candidates are pruned each round; the final
    top-k sorts (-score, doc_id) — ties by doc_id ASC, deterministic.
 
@@ -24,9 +26,12 @@ restriction only ever drops docs whose maximum achievable score is strictly
 below the final k-th score.
 
 Scale notes: only blocks of probed terms are read (IN-filter on term +
-partition pruning on term_bucket — O1 inverted-file pruning); the per-query
-group carries a few posting sub-lists, never the corpus. Salted sub-lists of
-one term are independent cursors (scores additive over disjoint doc sets).
+partition pruning on term_bucket — O1 inverted-file pruning). A scan task
+owns a set of queries (indexed path) or of doc shards (batch path); each
+block it needs ships to it once, however many of its queries probe the
+block's term, and all of its blocks decode in two codec calls. Salted
+sub-lists of one term join into one doc-sorted slice (scores additive over
+disjoint doc sets).
 """
 
 from __future__ import annotations
@@ -38,8 +43,10 @@ from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
 from ivfadc_spark.functions.codecs import varint_decode
+from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges
 from ivfadc_spark.operators.query import query_terms
 from ivfadc_spark.operators.segments import Segment
+from ivfadc_spark.sources.transcripts import _tokens_for_partitions
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
@@ -49,120 +56,333 @@ RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 # semi-join path keeps the pipeline fully distributed
 _COLLECT_PRUNE_MAX_ROWS = 20_000
 
+# postings per kernel chunk: cache-resident chunks — big chunks saturate
+# memory bandwidth when every core runs the kernel (measured 3x wall
+# regression at 2M elements x 32 workers)
+_CHUNK_POSTINGS = 262_144
 
-def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
-    """Decode ALL given block rows in two codec calls (varint streams are
-    self-delimiting and concatenable); absolute docIDs via segmented cumsum
-    reset at block starts. dl is GATHERED from the resident per-doc lookup
-    (format v3 blocks carry no dl stream; for v2 blocks the dead stream is
-    simply never read). Returns (ids, tf, dl) arrays."""
-    counts = rows["n"].to_numpy(np.int64)
-    total = int(counts.sum())
-    deltas = varint_decode(b"".join(bytes(x) for x in rows["doc_ids"]), total).astype(np.int64)
-    tf = varint_decode(b"".join(bytes(x) for x in rows["tfs"]), total).astype(np.float64)
-    c = np.cumsum(deltas)
+# the block columns the scan kernels read
+_SCAN_COLS = ["term", "salt", "block_id", "n", "doc_ids", "tfs", "max_tf", "min_dl"]
+
+
+def _isin(col: str, values):
+    """``col IN (values)`` parsed from one SQL string. ``Column.isin`` makes
+    one py4j call per value (about 0.5 s for the 1,342 terms of a
+    1,000-query batch); the parsed predicate is the same ``In`` and pushes
+    down to the parquet scan the same way."""
+
+    def lit(v):
+        if isinstance(v, (int, np.integer)):
+            return str(int(v))
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    return F.expr(f"`{col}` IN ({','.join(lit(v) for v in values)})")
+
+
+def _doc_ids(counts: np.ndarray, stream: bytes) -> np.ndarray:
+    """Absolute doc ids of concatenated delta-varint blocks of ``counts``
+    ids each: one decode (varint streams are self-delimiting), then a
+    cumsum reset at block starts."""
+    c = np.cumsum(varint_decode(stream, int(counts.sum())).astype(np.int64))
     bstarts = np.cumsum(counts) - counts
-    base = np.where(bstarts > 0, c[bstarts - 1], 0)
-    ids = c - np.repeat(base, counts)
-    dl = dl_arr[ids].astype(np.float64)
-    return ids, tf, dl
+    return c - np.repeat(np.where(bstarts > 0, c[bstarts - 1], 0), counts)
 
 
-def _scan_one_query(
-    pdf: pd.DataFrame, k: int, k1: float, b: float, avgdl: float, dl_arr: np.ndarray,
-    live: "np.ndarray | None" = None,
-) -> pd.DataFrame:
-    """Exact MaxScore scan over one query's candidate blocks (numpy).
+def _impact(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
+    """BM25 term impact: idf-free tf saturation with length normalization."""
+    return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
-    Whole-column decode per term — no per-block python (the v1 form paid a
-    ~0.3ms codec call per block via iterrows, unbounded for head terms)."""
 
-    def _impact(tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
-        return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+def _term_postings(blk: pd.DataFrame, dl_of, live, k1: float, b: float, avgdl: float):
+    """Decode one scan unit's block rows into doc-sorted term slices.
 
-    qid = int(pdf["query_id"].iloc[0])
-    # per-term upper bound from the avgdl-free block stats:
-    # idf * impact(max_tf, min_dl, avgdl) >= idf * impact(tf_i, dl_i, avgdl)
-    # (impact is increasing in tf, decreasing in dl)
-    mt = pdf["max_tf"].to_numpy(np.float64)
-    md = pdf["min_dl"].to_numpy(np.float64)
-    ub_imp = (mt * (k1 + 1.0)) / (mt + k1 * (1.0 - b + b * md / avgdl))
-    term_ub = (
-        pdf.assign(ub=pdf["idf"].to_numpy(np.float64) * ub_imp)
-        .groupby("term", sort=False)["ub"]
-        .max()
-        .sort_values(ascending=False)
+    The rows are sorted once by (term, salt, block_id) and all of them
+    decode in two codec calls. ``dl_of(sorted_rows, ids)`` returns each
+    posting's doc length. Postings masked out by ``live`` are dropped;
+    every bound, built from the block stats, stays an upper bound. A term
+    slice whose salts are not doc-ordered (v2 df-salted salts are hash
+    subsets of the docs) is sorted, because restricted queries
+    binary-search it.
+
+    Returns (terms, (t_start, t_len, t_maximp, ids, imp)); ``t_maximp`` is
+    each term's max block impact (upper bound from the avgdl-free
+    (max_tf, min_dl) stats: impact grows with tf and falls with dl)."""
+    blk = blk.sort_values(["term", "salt", "block_id"], kind="mergesort")
+    counts = blk["n"].to_numpy(np.int64)
+    ids = _doc_ids(counts, b"".join(blk["doc_ids"]))
+    tf = varint_decode(b"".join(blk["tfs"]), ids.size).astype(np.float64)
+    imp = _impact(tf, dl_of(blk, ids), k1, b, avgdl)
+    term = blk["term"].to_numpy()
+    tb = np.flatnonzero(np.r_[True, term[1:] != term[:-1]])
+    blk_imp = _impact(
+        blk["max_tf"].to_numpy(np.float64), blk["min_dl"].to_numpy(np.float64), k1, b, avgdl
     )
-    terms = list(term_ub.index)
-    ubs = term_ub.to_numpy(np.float64)
-    suffix = np.concatenate([np.cumsum(ubs[::-1])[::-1][1:], [0.0]])
-    by_term = dict(iter(pdf.groupby("term", sort=False)))
+    t_maximp = np.maximum.reduceat(blk_imp, tb)
+    t_ord = np.repeat(np.arange(tb.size), np.add.reduceat(counts, tb))
+    if live is not None:
+        keep = live[ids]
+        if not keep.all():
+            ids, imp, t_ord = ids[keep], imp[keep], t_ord[keep]
+    if ((ids[1:] <= ids[:-1]) & (t_ord[1:] == t_ord[:-1])).any():
+        order = np.lexsort((ids, t_ord))
+        ids, imp, t_ord = ids[order], imp[order], t_ord[order]
+    t_len = np.bincount(t_ord, minlength=tb.size)
+    return term[tb], (np.cumsum(t_len) - t_len, t_len, t_maximp, ids, imp)
 
-    acc_ids = np.empty(0, dtype=np.int64)
-    acc_sc = np.empty(0, dtype=np.float64)
-    restricted = False
-    for j, term in enumerate(terms):
-        rows = by_term[term]
-        idf = float(rows["idf"].iloc[0])
-        R = float(suffix[j])
-        if not restricted:
-            ids, tf, dl = _decode_block_rows(rows, dl_arr)
-            if live is not None and ids.size:
-                # mask only REMOVES candidates: every MaxScore bound stays a
-                # certified upper bound, top-k stays exact over live docs
-                lm = live[ids]
-                ids, tf, dl = ids[lm], tf[lm], dl[lm]
-            if ids.size:
-                all_ids = np.concatenate([acc_ids, ids])
-                all_sc = np.concatenate([acc_sc, idf * _impact(tf, dl)])
-                acc_ids, inv = np.unique(all_ids, return_inverse=True)
-                acc_sc = np.zeros(acc_ids.size, dtype=np.float64)
-                np.add.at(acc_sc, inv, all_sc)
-            if acc_ids.size >= k and R > 0.0:
-                theta = np.partition(acc_sc, acc_sc.size - k)[acc_sc.size - k]
-                if R < theta:
-                    restricted = True
-                    keep = acc_sc + R >= theta
-                    acc_ids, acc_sc = acc_ids[keep], acc_sc[keep]
-        else:
-            if acc_ids.size == 0:
-                break
-            lo, hi = int(acc_ids[0]), int(acc_ids[-1])
-            # block-max range skip, vectorized over the term's blocks
-            live_blocks = (rows["last_doc"].to_numpy(np.int64) >= lo) & (
-                rows["first_doc"].to_numpy(np.int64) <= hi
-            )
-            if live_blocks.any():
-                ids, tf, dl = _decode_block_rows(rows.loc[live_blocks], dl_arr)
-                if live is not None and ids.size:
-                    lm = live[ids]
-                    ids, tf, dl = ids[lm], tf[lm], dl[lm]
-                pos = np.searchsorted(acc_ids, ids)
-                pos_ok = pos < acc_ids.size
-                hit = np.zeros(ids.size, dtype=bool)
-                hit[pos_ok] = acc_ids[pos[pos_ok]] == ids[pos_ok]
+
+def _maxscore(qt: pd.DataFrame, terms: np.ndarray, post, k: int, shift: int):
+    """Multi-query MaxScore TAAT of ``qt``'s (query_id, term, idf) rows over
+    one scan unit's term slices (from :func:`_term_postings`).
+
+    Returns (query_id, doc_id, score) arrays holding, per query, every
+    candidate at or above its k-th score (tie supersets are fine: callers
+    rank exactly with :func:`_topk_per_query`).
+
+    Terms are processed in ROUNDS of descending per-query upper bound
+    (ub = idf * max block impact). Keys pack (chunk-local query ordinal <<
+    ``shift`` | doc), so one sorted accumulator serves every query at once
+    and the query part is a shift instead of an int64 division.
+
+    Per round, three query states:
+      ACTIVE    — postings union-merged into the accumulator
+                  (np.unique + bincount, the flat-TAAT kernel)
+      RESTRICTED— the query already holds k candidates whose k-th score θ
+                  exceeds the remaining-terms bound R: no unseen doc can
+                  reach its top-k, so its remaining (low-ub = LONG posting
+                  list) terms never enter a union again — each is scored by
+                  binary-searching the query's frozen candidate docs into
+                  the term's doc-sorted slice, O(C log P) instead of O(P)
+      EXHAUSTED — no terms left; candidates leave the accumulator so later
+                  unions stay small
+    Restriction is detected WITHOUT sorting: θ > R  <=>  at least k
+    accumulated scores strictly exceed R (one bincount); the exact k-th is
+    computed only at freeze time per newly-restricted query (np.partition of
+    its segment), where candidates that cannot reach θ with bound R are also
+    dropped."""
+    t_start, t_len, t_maximp, all_ids, all_imp = post
+    tix = pd.Index(terms).get_indexer(qt["term"])
+    has = tix >= 0
+    q, idf, tix = qt["query_id"].to_numpy(np.int64)[has], qt["idf"].to_numpy(np.float64)[has], tix[has]
+    if q.size == 0:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64)
+    ub = idf * t_maximp[tix]
+    # per-query descending-ub order (ties by term: deterministic)
+    o = np.lexsort((tix, -ub, q))
+    qt_ids, qt_idf, ubs_j = q[o], idf[o], ub[o]
+    starts_j, lens_j = t_start[tix[o]], t_len[tix[o]]
+    csum = np.cumsum(lens_j)
+    # chunk on query boundaries
+    qb = np.r_[np.flatnonzero(qt_ids[1:] != qt_ids[:-1]) + 1, qt_ids.size]
+    q_first = np.r_[0, qb[:-1]]
+    q_sizes = np.diff(np.r_[0, qb])
+    # term rank within its query (= round index) and the ub mass of the
+    # query's LATER rounds (the MaxScore remaining bound R)
+    round_j = np.arange(qt_ids.size) - np.repeat(q_first, q_sizes)
+    cs_ub = np.cumsum(ubs_j)
+    R_after = np.repeat(cs_ub[qb - 1], q_sizes) - cs_ub
+    # cumsum differences are NOT exact suffix sums: cancellation can
+    # understate the remaining-terms bound by ~n*eps*|cs|, and the pruning
+    # argument needs R to be a CERTIFIED upper bound. For nonnegative ubs the
+    # cumsum error at any index is bounded by n*eps*cs[-1]; inflating by
+    # twice that keeps R >= true suffix.
+    R_after += 2.0 * np.finfo(np.float64).eps * qt_ids.size * float(cs_ub[-1])
+    edges, base = [0], 0
+    while edges[-1] < qt_ids.size:
+        j = int(np.searchsorted(csum[qb - 1], base + _CHUNK_POSTINGS))
+        nxt = int(qb[min(j, qb.size - 1)])
+        if nxt <= edges[-1]:
+            nxt = int(qb[np.searchsorted(qb, edges[-1], side="right")])
+        edges.append(nxt)
+        base = csum[nxt - 1]
+    mask = (1 << shift) - 1
+    out_q, out_d, out_s = [], [], []
+    for lo, hi in zip(edges[:-1], edges[1:]):
+        if int(lens_j[lo:hi].sum()) == 0:
+            continue
+        p_q = qt_ids[lo:hi]
+        p_idf = qt_idf[lo:hi]
+        p_start = starts_j[lo:hi]
+        p_len = lens_j[lo:hi]
+        p_round = round_j[lo:hi]
+        p_R = R_after[lo:hi]
+        # rows are query-major, so a query's last round is its row count - 1
+        uq, q_inv, q_rows = np.unique(p_q, return_inverse=True, return_counts=True)
+        q_last = q_rows - 1
+        restricted = np.zeros(uq.size, dtype=bool)
+        acc_keys = np.empty(0, dtype=np.int64)
+        acc_sc = np.empty(0, dtype=np.float64)
+        frozen: dict = {}  # qloc -> [docs_sorted, scores]
+        done: list = []  # exhausted queries' (qloc, doc, score)
+        n_rounds = int(p_round.max()) + 1
+        for r in range(n_rounds):
+            sel = np.flatnonzero(p_round == r)
+            res = sel[restricted[q_inv[sel]]]
+            unres = sel[~restricted[q_inv[sel]]]
+            for j in res:
+                ql = q_inv[j]
+                docs_f, sc_f = frozen[ql]
+                s0 = p_start[j]
+                sl = all_ids[s0 : s0 + p_len[j]]
+                pos = np.searchsorted(sl, docs_f)
+                ok = pos < sl.size
+                hit = np.zeros(docs_f.size, dtype=bool)
+                hit[ok] = sl[pos[ok]] == docs_f[ok]
                 if hit.any():
-                    # a doc holds ONE posting per term (one salt), so the
-                    # hit positions are unique — plain fancy-index add
-                    acc_sc[pos[hit]] += idf * _impact(tf[hit], dl[hit])
-            # re-tighten θ and prune candidates with the bound over the
-            # still-unprocessed terms (j+1..end) = suffix[j]
-            if acc_ids.size >= k:
-                theta = np.partition(acc_sc, acc_sc.size - k)[acc_sc.size - k]
-                keep = acc_sc + R >= theta
-                acc_ids, acc_sc = acc_ids[keep], acc_sc[keep]
+                    sc_f[hit] += p_idf[j] * all_imp[s0 + pos[hit]]
+                # progressive prune: θ rises as terms land while the
+                # remaining bound falls — candidates below θ - R out
+                if docs_f.size > 4 * k:
+                    kth = np.partition(sc_f, sc_f.size - k)[sc_f.size - k]
+                    fk = sc_f + p_R[j] >= kth
+                    if not fk.all():
+                        frozen[ql] = [docs_f[fk], sc_f[fk]]
+            if unres.size:
+                ln = p_len[unres]
+                idx = _ranges(p_start[unres], ln)
+                keys = np.concatenate([acc_keys, (q_inv[unres].repeat(ln) << shift) | all_ids[idx]])
+                vals = np.concatenate([acc_sc, p_idf[unres].repeat(ln) * all_imp[idx]])
+                acc_keys, inv = np.unique(keys, return_inverse=True)
+                acc_sc = np.bincount(inv, weights=vals)
+            if acc_keys.size == 0 or r == n_rounds - 1:
+                continue
+            aql = acc_keys >> shift
+            Rnow = np.full(uq.size, np.inf)
+            Rnow[q_inv[sel]] = p_R[sel]
+            Rnow[q_last <= r] = 0.0
+            above = acc_sc > Rnow[aql]
+            cnt = np.bincount(aql, weights=above, minlength=uq.size)
+            newly = (cnt >= k) & ~restricted & (q_last > r)
+            exhaust = (~restricted) & (q_last <= r)
+            if newly.any() or exhaust.any():
+                is_new = newly[aql]
+                is_done = exhaust[aql]
+                if exhaust.any():
+                    done.append((aql[is_done], acc_keys[is_done] & mask, acc_sc[is_done]))
+                if newly.any():
+                    mv_keys = acc_keys[is_new]
+                    mv_sc = acc_sc[is_new]
+                    mv_q = aql[is_new]
+                    bnd = np.flatnonzero(np.r_[True, mv_q[1:] != mv_q[:-1]])
+                    for s, e in zip(bnd, np.r_[bnd[1:], mv_q.size]):
+                        ql = int(mv_q[s])
+                        seg_sc = mv_sc[s:e]
+                        kth = np.partition(seg_sc, seg_sc.size - k)[seg_sc.size - k]
+                        fk = seg_sc + Rnow[ql] >= kth
+                        frozen[ql] = [(mv_keys[s:e][fk] & mask).astype(np.int64), seg_sc[fk].copy()]
+                    restricted |= newly
+                stay = ~(is_new | is_done)
+                acc_keys, acc_sc = acc_keys[stay], acc_sc[stay]
+        # emit: per-query THRESHOLD selection (>= k-th score); a
+        # np.partition per query beats a full lexsort here
+        ql_l, d_l, s_l = [acc_keys >> shift], [acc_keys & mask], [acc_sc]
+        for ql, (docs_f, sc_f) in frozen.items():
+            ql_l.append(np.full(docs_f.size, ql, dtype=np.int64))
+            d_l.append(docs_f)
+            s_l.append(sc_f)
+        for t3 in done:
+            ql_l.append(t3[0])
+            d_l.append(t3[1])
+            s_l.append(t3[2])
+        eq = np.concatenate(ql_l)
+        ed = np.concatenate(d_l)
+        es = np.concatenate(s_l)
+        order = np.argsort(eq, kind="stable")
+        eq, ed, es = eq[order], ed[order], es[order]
+        bnd = np.flatnonzero(np.r_[True, eq[1:] != eq[:-1]])
+        keep = np.zeros(eq.size, dtype=bool)
+        for s, e in zip(bnd, np.r_[bnd[1:], eq.size]):
+            seg_sc = es[s:e]
+            if seg_sc.size <= k:
+                keep[s:e] = True
+            else:
+                kth = np.partition(seg_sc, seg_sc.size - k)[seg_sc.size - k]
+                keep[s:e] = seg_sc >= kth
+        out_q.append(uq[eq[keep]])
+        out_d.append(ed[keep])
+        out_s.append(es[keep])
+    if not out_q:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64)
+    return np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s)
 
-    if acc_ids.size == 0:
-        return pd.DataFrame(columns=["query_id", "rank", "doc_id", "score"])
-    order = np.lexsort((acc_ids, -acc_sc))[:k]
-    return pd.DataFrame(
-        {
-            "query_id": qid,
-            "rank": np.arange(1, order.size + 1, dtype=np.int32),
-            "doc_id": acc_ids[order],
-            "score": acc_sc[order],
-        }
+
+def _topk_per_query(qids, docs, scores, k):
+    """Vectorized per-query top-k over (qid, doc, score) triples, one
+    lexsort. Order: qid asc, score desc, doc asc (exact tie-break).
+    Returns (row indices, 1-based ranks)."""
+    order = np.lexsort((docs, -scores, qids))
+    qo = qids[order]
+    starts = np.flatnonzero(np.r_[True, qo[1:] != qo[:-1]])
+    counts = np.diff(np.r_[starts, qo.size])
+    within = np.arange(qo.size) - np.repeat(starts, counts)
+    keep = within < k
+    return order[keep], (within[keep] + 1).astype(np.int32)
+
+
+def _token_col(toks: list[int], p):
+    """The murmur3 placement token of scan partition ``p`` (a column):
+    ``repartition(len(toks), token)`` puts the row on partition ``p``."""
+    return F.element_at(F.array(*[F.lit(t) for t in toks]), p + 1)
+
+
+def _placed(blocks: DataFrame, qt: DataFrame, n: int) -> DataFrame:
+    """Block rows and (query_id, term, idf) query rows in ONE exchange: a
+    row whose ``tok`` is partition p's placement token lands on p. Query
+    rows are the ones with a NULL block_id; block rows carry query_id 0,
+    which keeps the column integral on the Python side."""
+    rows = blocks.withColumn("query_id", F.lit(0).cast("long")).unionByName(
+        qt.select("query_id", "term", "idf", "tok"), allowMissingColumns=True
     )
+    return rows.repartition(n, "tok")
+
+
+def _frames(batches):
+    """A scan task's (query rows, block rows), or None when it lacks
+    either kind."""
+    pdfs = [p for p in batches if len(p)]
+    if not pdfs:
+        return None
+    whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    is_q = whole["block_id"].isna().to_numpy()
+    if not is_q.any() or is_q.all():
+        return None
+    return whole[is_q], whole[~is_q]
+
+
+def _shard_dl(blk: pd.DataFrame, ids: np.ndarray, sent: "pd.DataFrame | None") -> np.ndarray:
+    """Doc lengths of a doc shard's postings: the per-posting dl stream of
+    format v2 blocks, else a lookup in the shard's SENTINEL rows — each
+    chunk's (doc_id -> dl) table, decoded once per shard."""
+    stream = b"".join(blk["dls"])
+    if stream:
+        return varint_decode(stream, ids.size).astype(np.float64)
+    if sent is None or not len(sent):
+        raise ValueError(
+            "bm25_topk_batch: shard has dl-free (v3) blocks but no sentinel "
+            "doc-stats rows — segment is corrupt or was filtered without "
+            "term IS NULL"
+        )
+    s_ids = _doc_ids(sent["n"].to_numpy(np.int64), b"".join(sent["doc_ids"]))
+    s_dl = varint_decode(b"".join(sent["dls"]), s_ids.size).astype(np.float64)
+    lo_id = int(s_ids.min())
+    # NaN-initialized so a posting doc id NOT covered by the sentinel table
+    # (corrupt / partially-filtered segment) raises instead of gathering
+    # uninitialized garbage; ids below lo_id would index negatively —
+    # checked explicitly.
+    table = np.full(int(s_ids.max()) - lo_id + 1, np.nan, dtype=np.float64)
+    table[s_ids - lo_id] = s_dl
+    gidx = ids - lo_id
+    if gidx.size and (int(gidx.min()) < 0 or int(gidx.max()) >= table.size):
+        raise ValueError(
+            "bm25_topk_batch: posting doc_id outside the shard's sentinel "
+            "doc-stats range — segment is corrupt"
+        )
+    dl = table[gidx]
+    if np.isnan(dl).any():
+        raise ValueError(
+            "bm25_topk_batch: posting doc_id missing from the sentinel "
+            "doc-stats table — segment is corrupt"
+        )
+    return dl
 
 
 def bm25_topk_batch(
@@ -173,41 +393,35 @@ def bm25_topk_batch(
     doc_mask: "np.ndarray | None" = None,
     use_dict_cache: bool = False,
 ) -> DataFrame:
-    """Doc-sharded batch top-k BM25 — the throughput path.
+    """Doc-sharded batch top-k BM25.
 
-    The term-partitioned path (:func:`bm25_topk_indexed`) copies every
-    candidate posting block to every query that probes its term: shuffle
-    volume grows with n_queries x posting bytes. Here the segment's uniform
-    doc shards (cfg.doc_shards; salt = hash(doc_id) % S) are exploited
-    instead: each shard is a complete sub-index over its doc subset, so
+    The segment's uniform doc shards (cfg.doc_shards) are each a complete
+    sub-index over their doc subset, so
 
-      1. ship each shard's (query-term-filtered) blocks ONCE to one task —
-         duplication factor is S, independent of batch size (the reference's
-         process-level scatter over segment shards,
-         /root/reference/vk_word_complete/startup.py:31-42);
-      2. the task decodes each (term, shard) list once, then answers EVERY
-         query against its shard with vectorized TAAT accumulation and emits
-         a local exact top-k (scores are doc-local, global stats broadcast);
-      3. global top-k = per-query merge of S local top-ks (S*k tiny rows).
+      1. each shard's (query-term-filtered) blocks ship ONCE to one task,
+         and every query row ships once to every task — the reference's
+         process-level scatter over segment shards
+         (vk_word_complete/startup.py:31-42);
+      2. the task decodes each shard once, then answers EVERY query against
+         it with the shared MaxScore kernel and emits a local candidate set
+         (scores are doc-local, global stats come with the query rows);
+      3. global top-k = per-query merge of the shards' local sets.
 
-    Rank-identical to the term-partitioned path and the brute-force oracle.
+    Rank-identical to :func:`bm25_topk_indexed` and the brute-force oracle.
+    Its dl travels shard-aligned in the sentinel rows, so no doc_space-sized
+    dl broadcast is needed.
 
     ``doc_mask``: optional doc_space-sized boolean keep-mask (attribute
     scoping, boolean NOT, ...). Tombstones recorded by ``delete_docs`` are
     ALWAYS applied on top (Lucene semantics: deleted docs never surface;
     corpus stats stay the segment's until compaction).
     """
-    import numpy as np
-
-    from pyspark.sql.window import Window
+    from ivfadc_spark.operators.deletes import live_broadcast
 
     k = k or cfg.top_k
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     spark = segment.spark
-
-    from ivfadc_spark.operators.deletes import live_broadcast
-
     bmask = live_broadcast(segment, doc_mask)
 
     # query prep: tokenize distributed (JVM explode) and collect the
@@ -228,13 +442,12 @@ def bm25_topk_batch(
     else:
         idf_pdf = (
             segment.dictionary.select("term", "idf")
-            .filter(F.col("term").isin(sorted(set(qt_pdf["term"]))))
+            .filter(_isin("term", sorted(set(qt_pdf["term"]))))
             .toPandas()
         )
         qt_pdf = qt_pdf.merge(idf_pdf, on="term")  # drops OOV
     if qt_pdf.empty:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    bq = spark.sparkContext.broadcast(qt_pdf)
     terms = sorted(set(qt_pdf["term"]))
 
     # sentinel doc-stats rows (term NULL, block_id -1) ride along: they carry
@@ -245,11 +458,8 @@ def bm25_topk_batch(
         # sentinels (block_id -1) ride along; positional twin rows (<= -10)
         # must NOT enter the scoring scan
         (F.col("block_id") >= -1)
-        & (F.col("term").isNull() | F.col("term").isin(terms))
-    ).select(
-        "term", "salt", "block_id", "n", "doc_ids", "tfs", "dls",
-        "max_tf", "min_dl",
-    )
+        & (F.col("term").isNull() | _isin("term", terms))
+    ).select(*_SCAN_COLS, "dls")
     # the shard contract comes STRICTLY from the segment's own build meta:
     # a df-salted segment (n_shards <= 0) splits one doc's postings across
     # DIFFERENT salts per term, which would silently double-count scores here
@@ -272,373 +482,51 @@ def bm25_topk_batch(
     # scan granularity = the PARTITION-level doc shard (salt // span): the
     # fine chunk salts only bounded the encoder's working set — grouping by
     # them would pay per-group fixed costs hundreds of times per task.
-    # range-partition on shard: hash repartition collides shard ids into
-    # uneven tasks (~1/e of partitions empty, stragglers with 2-3 shards);
-    # contiguous ranges give one-ish shard per task.
-    from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges
-
+    # Shard s is placed EXACTLY on partition s mod n_part: shard ids are
+    # dense (merges and federation rebase each source's salts), so tasks
+    # get even shares, where hash partitioning collides shard ids into
+    # uneven tasks (~1/e of partitions empty, stragglers with 2-3 shards).
     par = spark.sparkContext.defaultParallelism
-    shard_col = (
-        (F.col("salt") / F.lit(SALT_CHUNK_SPAN)).cast("int")
-        if chunk_salted
-        else F.col("salt")
+    n_part = min(n_shards, par * 2)
+    toks = _tokens_for_partitions(spark, n_part)
+    shard_col = (F.col("salt") / F.lit(SALT_CHUNK_SPAN)).cast("int") if chunk_salted else F.col("salt")
+    blocks = blocks.withColumn("shard", shard_col).withColumn(
+        "tok", _token_col(toks, F.pmod(F.col("shard"), F.lit(n_part)))
     )
-    # salt is KEPT: within a term, chunk salts are consecutive doc ranges of
-    # the source partition, so (salt, block_id) order makes the concatenated
-    # term slice globally doc-sorted — the restricted path binary-searches it
-    blocks = blocks.withColumn("shard", shard_col)
-    cand = blocks.repartitionByRange(min(n_shards, par * 2), "shard")
+    # every task scores every query against its shards: the query rows ride
+    # in the same exchange, one copy per task
+    qt_rows = pd.concat(
+        [qt_pdf[["query_id", "term", "idf"]].assign(tok=t) for t in toks], ignore_index=True
+    )
+    rows = _placed(
+        blocks, spark.createDataFrame(qt_rows, "query_id long, term string, idf double, tok int"), n_part
+    )
 
     # key stride = the TOTAL doc id space (zero-token docs included: ids are
     # dense over all transcript rows, so max doc_id can exceed the BM25
     # n_docs — using n_docs here would alias adjacent queries' keys)
-    n_docs_total = int(segment.doc_space) + 1
-    chunk_target = 262_144
-
-    def _topk_per_query(qids, docs, scores, kk, doc_sorted=False):
-        """Vectorized per-query top-k over (qid, doc, score) triples.
-        Order: qid asc, score desc, doc asc (exact tie-break).
-
-        doc_sorted=True: rows already ordered by (qid asc, doc asc) — then a
-        STABLE 2-key lexsort (score desc, qid asc) inherits doc-asc tie
-        order from the input, saving a third sort pass."""
-        if doc_sorted:
-            order = np.lexsort((-scores, qids))
-        else:
-            order = np.lexsort((docs, -scores, qids))
-        qo = qids[order]
-        starts = np.flatnonzero(np.r_[True, qo[1:] != qo[:-1]])
-        counts = np.diff(np.r_[starts, qo.size])
-        within = np.arange(qo.size) - np.repeat(starts, counts)
-        keep = within < kk
-        return order[keep], (within[keep] + 1).astype(np.int32)
+    shift = int(segment.doc_space).bit_length()
 
     def scan_shards(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
+        got = _frames(batches)
+        if got is None:
             return
-        whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        qp = bq.value
-        is_sent = whole["block_id"].to_numpy() == -1
-        sent_by_shard = (
-            dict(iter(whole[is_sent].groupby("shard", sort=False)))
-            if is_sent.any()
-            else {}
-        )
-        for _shard, sg in whole[~is_sent].groupby("shard", sort=False):
-            # whole-shard vectorized decode: varint streams are
-            # self-delimiting, so ALL blocks decode in two codec calls
-            # (per-block calls cost ~0.3ms each and dominate otherwise);
-            # docIDs then need a segmented cumsum reset at block starts.
-            t_start: dict = {}
-            t_len: dict = {}
-            t_maximp: dict = {}
-            id_bufs, tf_bufs, dl_bufs, counts_l = [], [], [], []
-            pos = 0
-            for term, tg in sg.groupby("term", sort=False):
-                tg = tg.sort_values(["salt", "block_id"], kind="mergesort")
-                id_bufs.extend(bytes(x) for x in tg["doc_ids"])
-                tf_bufs.extend(bytes(x) for x in tg["tfs"])
-                dl_bufs.extend(bytes(x) for x in tg["dls"])
-                counts_l.extend(int(x) for x in tg["n"])
-                tl = int(tg["n"].sum())
-                t_start[term] = pos
-                t_len[term] = tl
-                pos += tl
-                # per-term impact bound from the avgdl-free block stats —
-                # feeds the MaxScore restriction below
-                mt = tg["max_tf"].to_numpy(np.float64)
-                md = tg["min_dl"].to_numpy(np.float64)
-                t_maximp[term] = float(
-                    ((mt * (k1 + 1.0)) / (mt + k1 * (1.0 - b + b * md / avgdl))).max()
-                )
-            if pos == 0:
-                continue
-            counts = np.asarray(counts_l, dtype=np.int64)
-            deltas = varint_decode(b"".join(id_bufs), pos).astype(np.int64)
-            tf = varint_decode(b"".join(tf_bufs), pos).astype(np.float64)
-            dl_stream = b"".join(dl_bufs)
-            stream_dl = len(dl_stream) > 0
-            # segmented cumsum: absolute ids = cumsum(deltas) minus the
-            # running total at each block's start
-            c = np.cumsum(deltas)
-            bstarts = np.cumsum(counts) - counts
-            base = np.where(bstarts > 0, c[bstarts - 1], 0)
-            all_ids = c - np.repeat(base, counts)
-            if stream_dl:  # format v2 blocks: per-posting dl stream
-                dl = varint_decode(dl_stream, pos).astype(np.float64)
-                denom = k1 * (1.0 - b + b * dl / avgdl)
-            else:
-                # format v3: per-doc norm from this shard's SENTINEL rows —
-                # each chunk's (doc_id -> dl) table, decoded once per shard
-                sent = sent_by_shard.get(_shard)
-                if sent is None or not len(sent):
-                    raise ValueError(
-                        "bm25_topk_batch: shard has dl-free (v3) blocks but "
-                        "no sentinel doc-stats rows — segment is corrupt or "
-                        "was filtered without term IS NULL"
-                    )
-                s_counts = sent["n"].to_numpy(np.int64)
-                s_tot = int(s_counts.sum())
-                s_deltas = varint_decode(
-                    b"".join(bytes(x) for x in sent["doc_ids"]), s_tot
-                ).astype(np.int64)
-                s_dl = varint_decode(
-                    b"".join(bytes(x) for x in sent["dls"]), s_tot
-                ).astype(np.float64)
-                sc = np.cumsum(s_deltas)
-                s_starts = np.cumsum(s_counts) - s_counts
-                s_base = np.where(s_starts > 0, sc[s_starts - 1], 0)
-                s_ids = sc - np.repeat(s_base, s_counts)
-                lo_id = int(s_ids.min())
-                # NaN-initialized so a posting doc id NOT covered by the
-                # sentinel table (corrupt / partially-filtered segment)
-                # raises instead of gathering uninitialized garbage; ids
-                # below lo_id would index negatively — checked explicitly.
-                norm = np.full(int(s_ids.max()) - lo_id + 1, np.nan, dtype=np.float64)
-                norm[s_ids - lo_id] = k1 * (1.0 - b + b * s_dl / avgdl)
-                gidx = all_ids - lo_id
-                if gidx.size and (int(gidx.min()) < 0 or int(gidx.max()) >= norm.size):
-                    raise ValueError(
-                        "bm25_topk_batch: posting doc_id outside the shard's "
-                        "sentinel doc-stats range — segment is corrupt"
-                    )
-                denom = norm[gidx]
-                if np.isnan(denom).any():
-                    raise ValueError(
-                        "bm25_topk_batch: posting doc_id missing from the "
-                        "sentinel doc-stats table — segment is corrupt"
-                    )
-            all_imp = (tf * (k1 + 1.0)) / (tf + denom)
-            if bmask is not None:
-                # drop masked-out (deleted / out-of-scope) postings and
-                # recompute the term slice offsets — surviving ids keep
-                # their order, so the doc-sorted-slice invariant holds and
-                # every bound (built pre-filter) stays an upper bound
-                lv_post = bmask.value[all_ids]
-                if not lv_post.all():
-                    tl_arr = np.fromiter(
-                        t_len.values(), dtype=np.int64, count=len(t_len)
-                    )
-                    ord_post = np.repeat(np.arange(tl_arr.size), tl_arr)[lv_post]
-                    all_ids, all_imp = all_ids[lv_post], all_imp[lv_post]
-                    new_len = np.bincount(ord_post, minlength=tl_arr.size)
-                    new_start = np.r_[0, np.cumsum(new_len)[:-1]]
-                    for i, t in enumerate(list(t_start)):
-                        t_start[t] = int(new_start[i])
-                        t_len[t] = int(new_len[i])
-            # multi-query vectorized MaxScore TAAT, processed in ROUNDS of
-            # descending per-query term upper bound (ub = idf * max block
-            # impact). Keys pack (chunk-local query ordinal << SHIFT | doc),
-            # so one sorted accumulator serves every query at once and the
-            # query part is a SHIFT instead of an int64 division.
-            #
-            # Per round, three query states:
-            #   ACTIVE    — postings union-merged into the accumulator
-            #               (np.unique + bincount, the flat-TAAT kernel)
-            #   RESTRICTED— the query already holds k candidates whose k-th
-            #               score θ exceeds the remaining-terms bound R: no
-            #               unseen doc can reach its top-k, so its remaining
-            #               (low-ub = LONG posting list) terms never enter a
-            #               union again — each is scored by binary-searching
-            #               the query's frozen candidate docs into the term's
-            #               doc-sorted slice, O(C log P) instead of O(P)
-            #   EXHAUSTED — no terms left; candidates leave the accumulator
-            #               so later unions stay small
-            # Restriction is detected WITHOUT sorting: θ > R  <=>  at least
-            # k accumulated scores strictly exceed R (one bincount); the
-            # exact k-th is computed only at freeze time per newly-restricted
-            # query (np.partition of its segment), where candidates that
-            # cannot reach θ with bound R are also dropped — the same exact
-            # top-k argument as _scan_one_query, vectorized across the chunk.
-            qt = qp[qp["term"].isin(t_start.keys())]
-            if qt.empty:
-                continue
-            ub_col = (
-                qt["idf"].to_numpy(np.float64)
-                * qt["term"].map(t_maximp).to_numpy(np.float64)
+        qt, blk = got
+        lv = bmask.value if bmask is not None else None
+        is_sent = blk["block_id"].to_numpy() == -1
+        sent_by_shard = dict(iter(blk[is_sent].groupby("shard", sort=False)))
+        for shard, sg in blk[~is_sent].groupby("shard", sort=False):
+            sent = sent_by_shard.get(shard)
+            terms_s, post = _term_postings(
+                sg, lambda blk_s, ids: _shard_dl(blk_s, ids, sent), lv, k1, b, avgdl
             )
-            qt = qt.assign(_ub=ub_col)
-            # per-query descending-ub order (ties by term: deterministic);
-            # mergesort keeps it stable
-            qt = qt.sort_values(
-                ["query_id", "_ub", "term"], ascending=[True, False, True],
-                kind="mergesort",
-            )
-            qt_ids = qt["query_id"].to_numpy(np.int64)
-            qt_idf = qt["idf"].to_numpy(np.float64)
-            starts_j = qt["term"].map(t_start).to_numpy(np.int64)
-            lens_j = qt["term"].map(t_len).to_numpy(np.int64)
-            ubs_j = qt["_ub"].to_numpy(np.float64)
-            csum = np.cumsum(lens_j)
-            # chunk on query boundaries; cache-resident chunks: big chunks saturate
-            # memory bandwidth when every core runs this loop (measured 3x wall
-            # regression at 2M elements x 32 workers)
-            qb = np.r_[np.flatnonzero(qt_ids[1:] != qt_ids[:-1]) + 1, qt_ids.size]
-            q_first = np.r_[0, qb[:-1]]
-            q_sizes = np.diff(np.r_[0, qb])
-            # term rank within its query (= round index) and the ub mass of
-            # the query's LATER rounds (the MaxScore remaining bound R)
-            round_j = np.arange(qt_ids.size) - np.repeat(q_first, q_sizes)
-            cs_ub = np.cumsum(ubs_j)
-            R_after = np.repeat(cs_ub[qb - 1], q_sizes) - cs_ub
-            # cumsum differences are NOT exact suffix sums: cancellation can
-            # understate the remaining-terms bound by ~n*eps*|cs|, and the
-            # pruning argument needs R to be a CERTIFIED upper bound. For
-            # nonnegative ubs the cumsum error at any index is bounded by
-            # n*eps*cs[-1]; inflating by twice that keeps R >= true suffix.
-            R_after += 2.0 * np.finfo(np.float64).eps * qt_ids.size * float(cs_ub[-1])
-            edges, base = [0], 0
-            while edges[-1] < qt_ids.size:
-                j = int(np.searchsorted(csum[qb - 1], base + chunk_target))
-                nxt = int(qb[min(j, qb.size - 1)])
-                if nxt <= edges[-1]:
-                    nxt = int(qb[np.searchsorted(qb, edges[-1], side="right")])
-                edges.append(nxt)
-                base = csum[nxt - 1]
-            shift = int(n_docs_total - 1).bit_length()
-            mask = (1 << shift) - 1
-            out_q, out_d, out_s = [], [], []
-            for lo, hi in zip(edges[:-1], edges[1:]):
-                if int(lens_j[lo:hi].sum()) == 0:
-                    continue
-                p_q = qt_ids[lo:hi]
-                p_idf = qt_idf[lo:hi]
-                p_start = starts_j[lo:hi]
-                p_len = lens_j[lo:hi]
-                p_round = round_j[lo:hi]
-                p_R = R_after[lo:hi]
-                uq, q_inv = np.unique(p_q, return_inverse=True)
-                q_last = np.zeros(uq.size, dtype=np.int64)
-                np.maximum.at(q_last, q_inv, p_round)
-                restricted = np.zeros(uq.size, dtype=bool)
-                acc_keys = np.empty(0, dtype=np.int64)
-                acc_sc = np.empty(0, dtype=np.float64)
-                frozen: dict = {}  # qloc -> [docs_sorted, scores]
-                done: list = []  # exhausted queries' (qloc, doc, score)
-                n_rounds = int(p_round.max()) + 1
-                for r in range(n_rounds):
-                    sel = np.flatnonzero(p_round == r)
-                    res = sel[restricted[q_inv[sel]]]
-                    unres = sel[~restricted[q_inv[sel]]]
-                    for j in res:
-                        ql = q_inv[j]
-                        docs_f, sc_f = frozen[ql]
-                        s0 = p_start[j]
-                        sl = all_ids[s0 : s0 + p_len[j]]
-                        pos = np.searchsorted(sl, docs_f)
-                        ok = pos < sl.size
-                        hit = np.zeros(docs_f.size, dtype=bool)
-                        hit[ok] = sl[pos[ok]] == docs_f[ok]
-                        if hit.any():
-                            sc_f[hit] += p_idf[j] * all_imp[s0 + pos[hit]]
-                        # progressive prune: θ rises as terms land while the
-                        # remaining bound falls — candidates below θ - R out
-                        if docs_f.size > 4 * k:
-                            kth = np.partition(sc_f, sc_f.size - k)[sc_f.size - k]
-                            fk = sc_f + p_R[j] >= kth
-                            if not fk.all():
-                                frozen[ql] = [docs_f[fk], sc_f[fk]]
-                    if unres.size:
-                        ln = p_len[unres]
-                        idx = _ranges(p_start[unres], ln)
-                        keys = np.concatenate([
-                            acc_keys,
-                            (q_inv[unres].repeat(ln) << shift) | all_ids[idx],
-                        ])
-                        vals = np.concatenate([
-                            acc_sc,
-                            p_idf[unres].repeat(ln) * all_imp[idx],
-                        ])
-                        acc_keys, inv = np.unique(keys, return_inverse=True)
-                        acc_sc = np.bincount(inv, weights=vals)
-                    if acc_keys.size == 0 or r == n_rounds - 1:
-                        if r == n_rounds - 1:
-                            break
-                        continue
-                    aql = acc_keys >> shift
-                    Rnow = np.full(uq.size, np.inf)
-                    Rnow[q_inv[sel]] = p_R[sel]
-                    Rnow[q_last <= r] = 0.0
-                    above = acc_sc > Rnow[aql]
-                    cnt = np.bincount(aql, weights=above, minlength=uq.size)
-                    newly = (cnt >= k) & ~restricted & (q_last > r)
-                    exhaust = (~restricted) & (q_last <= r)
-                    if newly.any() or exhaust.any():
-                        is_new = newly[aql]
-                        is_done = exhaust[aql]
-                        if exhaust.any():
-                            done.append((
-                                aql[is_done],
-                                acc_keys[is_done] & mask,
-                                acc_sc[is_done],
-                            ))
-                        if newly.any():
-                            mv_keys = acc_keys[is_new]
-                            mv_sc = acc_sc[is_new]
-                            mv_q = aql[is_new]
-                            bnd = np.flatnonzero(np.r_[True, mv_q[1:] != mv_q[:-1]])
-                            for s, e in zip(bnd, np.r_[bnd[1:], mv_q.size]):
-                                ql = int(mv_q[s])
-                                seg_sc = mv_sc[s:e]
-                                kth = np.partition(seg_sc, seg_sc.size - k)[
-                                    seg_sc.size - k
-                                ]
-                                fk = seg_sc + Rnow[ql] >= kth
-                                frozen[ql] = [
-                                    (mv_keys[s:e][fk] & mask).astype(np.int64),
-                                    seg_sc[fk].copy(),
-                                ]
-                            restricted |= newly
-                        stay = ~(is_new | is_done)
-                        acc_keys, acc_sc = acc_keys[stay], acc_sc[stay]
-                # emit: per-query THRESHOLD selection (>= k-th score; tie
-                # supersets are fine — merge_topk re-ranks exactly). A
-                # np.partition per query beats a full lexsort here.
-                ql_l, d_l, s_l = [], [], []
-                if acc_keys.size:
-                    ql_l.append(acc_keys >> shift)
-                    d_l.append(acc_keys & mask)
-                    s_l.append(acc_sc)
-                for ql, (docs_f, sc_f) in frozen.items():
-                    ql_l.append(np.full(docs_f.size, ql, dtype=np.int64))
-                    d_l.append(docs_f)
-                    s_l.append(sc_f)
-                for t3 in done:
-                    ql_l.append(t3[0])
-                    d_l.append(t3[1])
-                    s_l.append(t3[2])
-                if not ql_l:
-                    continue
-                eq = np.concatenate(ql_l)
-                ed = np.concatenate(d_l)
-                es = np.concatenate(s_l)
-                order = np.argsort(eq, kind="stable")
-                eq, ed, es = eq[order], ed[order], es[order]
-                bnd = np.flatnonzero(np.r_[True, eq[1:] != eq[:-1]])
-                keep = np.zeros(eq.size, dtype=bool)
-                for s, e in zip(bnd, np.r_[bnd[1:], eq.size]):
-                    seg_sc = es[s:e]
-                    if seg_sc.size <= k:
-                        keep[s:e] = True
-                    else:
-                        kth = np.partition(seg_sc, seg_sc.size - k)[seg_sc.size - k]
-                        keep[s:e] = seg_sc >= kth
-                out_q.append(uq[eq[keep]])
-                out_d.append(ed[keep])
-                out_s.append(es[keep])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "doc_id": np.concatenate(out_d),
-                        "score": np.concatenate(out_s),
-                    }
-                )
+            q, d, s = _maxscore(qt, terms_s, post, k, shift)
+            if q.size:
+                yield pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
 
-    local = cand.mapInPandas(scan_shards, "query_id long, doc_id long, score double")
+    local = rows.mapInPandas(scan_shards, "query_id long, doc_id long, score double")
 
-    # final merge: per query pick k best of <= S*k local candidates —
+    # final merge: per query pick k best of the shards' local candidates —
     # vectorized (one lexsort + segment-rank per task, no per-group loop)
     def merge_topk(batches):
         pdfs = [p for p in batches if len(p)]
@@ -650,12 +538,7 @@ def bm25_topk_batch(
         scores = whole["score"].to_numpy(np.float64)
         keep, rank = _topk_per_query(qids, docs, scores, k)
         yield pd.DataFrame(
-            {
-                "query_id": qids[keep],
-                "rank": rank,
-                "doc_id": docs[keep],
-                "score": scores[keep],
-            }
+            {"query_id": qids[keep], "rank": rank, "doc_id": docs[keep], "score": scores[keep]}
         )
 
     return local.repartition(par, "query_id").mapInPandas(merge_topk, RESULT_SCHEMA)
@@ -681,7 +564,7 @@ def bm25_topk_indexed(
     term-pruned ``term IN (...)`` dictionary read resolves its idf and
     term buckets, and the blocks scan is pruned statically. A larger batch
     never reaches the driver: it joins the broadcast dictionary and prunes
-    the scan with a broadcast semi-join.
+    the scan with a broadcast join.
 
     ``doc_mask``: optional doc_space-sized boolean keep-mask (attribute
     scoping, boolean NOT, ...). Tombstones recorded by ``delete_docs`` are
@@ -705,7 +588,7 @@ def bm25_topk_indexed(
     qt_pdf = pd.DataFrame(probe, columns=qterms.columns)
     if not qt_pdf.empty:
         idf_pdf = (
-            segment.dictionary.filter(F.col("term").isin(sorted(set(qt_pdf["term"]))))
+            segment.dictionary.filter(_isin("term", sorted(set(qt_pdf["term"]))))
             .select("term", "idf", _bucket_col(n_buckets).alias("term_bucket"))
             .toPandas()
         )
@@ -733,6 +616,37 @@ def _topk_scan_from_qt(
     return _scan_collected(segment, qt_pdf, k, k1, b, avgdl, bmask)
 
 
+def _collected_input(segment: Segment, qt_pdf: pd.DataFrame) -> DataFrame:
+    """The scan input of a collected (query_id, term, idf, term_bucket)
+    frame: the queries are dealt round-robin onto the scan partitions, and
+    the blocks scan, pruned STATICALLY (term_bucket partition prune + term
+    row-group min/max prune — O1 inverted-file pruning), joins the distinct
+    (term, partition) pairs. A block thus ships at most once per partition,
+    however many queries probe its term."""
+    spark = segment.spark
+    uq, q_ord = np.unique(qt_pdf["query_id"].to_numpy(np.int64), return_inverse=True)
+    # no more partitions than queries: an empty Python task still costs a
+    # worker round trip
+    n = min(spark.sparkContext.defaultParallelism, uq.size)
+    toks = np.asarray(_tokens_for_partitions(spark, n), dtype=np.int32)
+    qt = qt_pdf[["query_id", "term", "idf"]].assign(tok=toks[q_ord % n])
+    # from pandas through Arrow, a frame under
+    # spark.sql.execution.arrow.localRelationThreshold is a local relation:
+    # its broadcast is one JVM-only job, where a list of Rows would first be
+    # parallelized and unpickled by Python workers
+    tp = spark.createDataFrame(qt[["term", "tok"]].drop_duplicates(), "term string, tok int")
+    blocks = (
+        segment.blocks.filter(
+            _isin("term_bucket", sorted({int(x) for x in qt_pdf["term_bucket"]}))
+            & _isin("term", sorted(set(qt_pdf["term"])))
+        )
+        .select(*_SCAN_COLS)
+        .join(F.broadcast(tp), "term")
+    )
+    qt_df = spark.createDataFrame(qt, "query_id long, term string, idf double, tok int")
+    return _placed(blocks, qt_df, n)
+
+
 def _scan_collected(
     segment: Segment,
     qt_pdf: pd.DataFrame,
@@ -742,28 +656,10 @@ def _scan_collected(
     avgdl: float,
     bmask,
 ) -> DataFrame:
-    """Small-batch / low-latency path: the collected (query_id, term, idf,
-    term_bucket) rows prune the blocks scan STATICALLY — term_bucket
-    partition prune + term row-group min/max prune (O1 inverted-file
-    pruning)."""
-    spark = segment.spark
+    """Small-batch / low-latency path over a collected query-term frame."""
     if qt_pdf.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    terms = sorted(set(qt_pdf["term"]))
-    buckets = sorted({int(x) for x in qt_pdf["term_bucket"]})
-    # from pandas through Arrow, a frame under
-    # spark.sql.execution.arrow.localRelationThreshold is a local relation:
-    # its broadcast is one JVM-only job, where a list of Rows would first be
-    # parallelized and unpickled by Python workers
-    qt_df = F.broadcast(
-        spark.createDataFrame(
-            qt_pdf[["term", "query_id", "idf"]], "term string, query_id long, idf double"
-        )
-    )
-    blocks = segment.blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-    )
-    return _scan(segment, blocks.join(qt_df, "term"), k, k1, b, avgdl, bmask)
+        return segment.spark.createDataFrame([], RESULT_SCHEMA)
+    return _scan(segment, _collected_input(segment, qt_pdf), k, k1, b, avgdl, bmask)
 
 
 def _scan_broadcast(
@@ -775,48 +671,54 @@ def _scan_broadcast(
     avgdl: float,
     bmask,
 ) -> DataFrame:
-    """Large-batch / throughput path: no driver round-trip — the query term
-    set is broadcast JVM-side and prunes the scan via a broadcast semi-join
-    (partition pruning via DPP on term_bucket where applicable), so a
-    Python collect of queries x terms never serializes the pipeline."""
-    qt_df = F.broadcast(qt.select("term", "query_id", "idf"))
-    blocks = segment.blocks.join(
-        F.broadcast(qt.select("term").distinct()), "term", "leftsemi"
+    """Large-batch / throughput path: no driver round-trip — each query's
+    scan partition is pmod(hash(query_id), par), computed JVM-side, and the
+    distinct (term, partition) pairs prune and place the blocks through a
+    broadcast join, so a Python collect of queries x terms never serializes
+    the pipeline."""
+    par = segment.spark.sparkContext.defaultParallelism
+    toks = _tokens_for_partitions(segment.spark, par)
+    qt = qt.withColumn("tok", _token_col(toks, F.pmod(F.hash("query_id"), F.lit(par))))
+    blocks = segment.blocks.select(*_SCAN_COLS).join(
+        F.broadcast(qt.select("term", "tok").distinct()), "term"
     )
-    return _scan(segment, blocks.join(qt_df, "term"), k, k1, b, avgdl, bmask)
+    return _scan(segment, _placed(blocks, qt, par), k, k1, b, avgdl, bmask)
 
 
 def _scan(
     segment: Segment,
-    cand: DataFrame,
+    rows: DataFrame,
     k: int,
     k1: float,
     b: float,
     avgdl: float,
     bmask,
 ) -> DataFrame:
-    """Per-query MaxScore over the candidate (block x query) rows."""
-    # hash-partition by query, then scan MANY queries per task inside one
-    # mapInPandas pass. groupBy().applyInPandas here pays per-GROUP Arrow +
-    # invocation overhead (~10ms x n_queries — it dominates the batch);
-    # mapInPandas pays it per PARTITION. A query's rows may span Arrow
-    # batches, so each task concatenates its partition (bounded: one
-    # partition holds ~n_queries/par query working sets) before grouping.
-    par = segment.spark.sparkContext.defaultParallelism
-    cand = cand.repartition(par, "query_id")
-    bdl = segment.dl_broadcast  # resident per-doc dl (v3: blocks carry no dl)
+    """Exact per-query top-k over placed scan rows (:func:`_placed`).
+
+    Each task holds whole queries and one copy of every block they probe.
+    It decodes all of its blocks at once, gathers dl from the resident
+    per-doc lookup (format v3 blocks carry no dl stream), applies the live
+    mask, scores every query with the shared MaxScore kernel and ranks them
+    all with one lexsort: one Python invocation per partition, not per
+    query or per (query, block)."""
+    bdl = segment.dl_broadcast
+    shift = int(segment.doc_space).bit_length()
 
     def scan(batches):
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if not pdfs:
+        got = _frames(batches)
+        if got is None:
             return
-        whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        qt, blk = got
         dl_arr = bdl.value
         lv = bmask.value if bmask is not None else None
-        for _, g in whole.groupby("query_id", sort=False):
-            yield _scan_one_query(g, k, k1, b, avgdl, dl_arr, live=lv)
+        terms, post = _term_postings(blk, lambda _b, ids: dl_arr[ids], lv, k1, b, avgdl)
+        q, d, s = _maxscore(qt, terms, post, k, shift)
+        keep, rank = _topk_per_query(q, d, s, k)
+        if keep.size:
+            yield pd.DataFrame({"query_id": q[keep], "rank": rank, "doc_id": d[keep], "score": s[keep]})
 
-    return cand.mapInPandas(scan, RESULT_SCHEMA)
+    return rows.mapInPandas(scan, RESULT_SCHEMA)
 
 
 def prefix_topk(

@@ -179,6 +179,39 @@ def test_batch_refuses_df_salted_segment(spark, tmp_path):
         bm25_topk_batch(queries, seg, k=5, cfg=cfg)
 
 
+def test_indexed_df_salted_segment_rank_identical(spark, tmp_path):
+    """On a df-salted (v2, doc_shards=0) segment a salted term's salts are
+    hash subsets of its docs, so its concatenated blocks are not doc-sorted.
+    Queries that restrict on headterm (k below the rare term's df) score it
+    by binary search, which needs the kernel's per-term doc sort."""
+    from ivfadc_spark.operators.query import bm25_topk
+
+    cfg = EngineConfig(block_size=16, doc_shards=0, salt_df_threshold=20, max_salts=4)
+    tx = synth_transcripts(spark, n_conversations=20)
+    seg = build_index(spark, tx, str(tmp_path / "v2"), cfg=cfg)
+    met = seg.metrics.toPandas().set_index("term")
+    assert met.loc["headterm", "n_salts"] > 1
+    queries = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "query_id": [0, 1, 2, 3],
+                "text": ["term000 headterm", "term001 headterm", "term017 term003 headterm", "term005 headterm"],
+            }
+        ),
+        schema="query_id long, text string",
+    )
+    tf = decode_blocks(seg.blocks).select("doc_id", "term", "tf")
+    want = (
+        bm25_topk(queries, tf, seg.dictionary, seg.doc_lengths, seg.meta["avgdl"], k=3, cfg=cfg)
+        .orderBy("query_id", "rank")
+        .toPandas()
+    )
+    got = bm25_topk_indexed(queries, seg, k=3, cfg=cfg).orderBy("query_id", "rank").toPandas()
+    assert list(got["query_id"]) == list(want["query_id"]) == [q for q in range(4) for _ in range(3)]
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
+
+
 def test_phrase_topk_matches_bruteforce(spark, tmp_path):
     """Positional sidecar phrase counts == a per-doc brute scan in pandas."""
     import re

@@ -49,15 +49,16 @@ def _queries_df(spark):
     )
 
 
-def _df_path_topk(spark, seg, k=10):
+def _df_path_topk(spark, seg, k=10, queries=None):
     """Reference result from the pure-DataFrame path over decoded postings.
     dl comes from the segment's doc-length sidecar (format v3 posting
     blocks carry no per-posting dl stream)."""
     dec = decode_blocks(seg.blocks)
     tf = dec.select("doc_id", "term", "tf")
     dl = seg.doc_lengths
+    queries = queries if queries is not None else _queries_df(spark)
     return (
-        bm25_topk(_queries_df(spark), tf, seg.dictionary, dl, seg.meta["avgdl"], k=k, cfg=CFG)
+        bm25_topk(queries, tf, seg.dictionary, dl, seg.meta["avgdl"], k=k, cfg=CFG)
         .orderBy("query_id", "rank")
         .toPandas()
     )
@@ -137,6 +138,56 @@ def test_wand_rank_identical_to_dataframe_path(spark, corpus):
     assert list(got["doc_id"]) == list(want["doc_id"])
     import numpy as np
 
+    np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
+
+
+def test_indexed_batch_ships_each_block_once_per_task(spark, corpus):
+    """A batch whose every query probes headterm gives the scan each
+    headterm block at most once per scan partition, not once per query,
+    and still answers rank-identically to the DataFrame path."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from ivfadc_spark.operators.query import query_terms
+    from ivfadc_spark.operators.wand import _bucket_col, _collected_input
+
+    tx, seg, out = corpus
+    n_q = 64
+    queries = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "query_id": np.arange(n_q, dtype=np.int64),
+                "text": [f"headterm term{i % 40:03d}" for i in range(n_q)],
+            }
+        ),
+        schema="query_id long, text string",
+    )
+    qt = query_terms(queries).toPandas().merge(
+        seg.dictionary.select(
+            "term", "idf", _bucket_col(seg.meta["config"].get("term_buckets", CFG.term_buckets)).alias("term_bucket")
+        ).toPandas(),
+        on="term",
+    )
+    assert (qt["term"] == "headterm").sum() == n_q
+    head = (
+        _collected_input(seg, qt)
+        .filter((F.col("term") == "headterm") & F.col("block_id").isNotNull())
+        .groupBy("salt", "block_id")
+        .count()
+        .toPandas()
+    )
+    n_blocks = seg.blocks.filter(F.col("term") == "headterm").count()
+    assert len(head) == n_blocks > 1
+    assert head["count"].max() <= spark.sparkContext.defaultParallelism < n_q
+
+    want = _df_path_topk(spark, seg, queries=queries)
+    got = (
+        bm25_topk_indexed(queries, seg, k=10, cfg=CFG)
+        .orderBy("query_id", "rank")
+        .toPandas()
+    )
+    assert list(got["query_id"]) == list(want["query_id"])
+    assert list(got["doc_id"]) == list(want["doc_id"])
     np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
 
 
